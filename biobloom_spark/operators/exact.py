@@ -59,12 +59,6 @@ __all__ = ["shingle_frames", "exact_classify", "exact_classify_summary",
 _PIVOT_MAX_LABELS = 64
 
 
-def _tokens(text_col: str):
-    from ..sources.tables import tokens_col
-
-    return tokens_col(text_col)
-
-
 def shingle_array_col(text_col, w: int = 3):
     """Array of w-token shingle strings, via ONE codegen'd regex pass.
 

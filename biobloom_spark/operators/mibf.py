@@ -21,8 +21,10 @@ over the corpus partitions (zero shuffle — only sparse claim blobs move),
 ownership resolves by an associative min-tiebreak merge in one reducer
 per slot-range segment (the driver only memcpy-assembles resolved uint16
 slices — claim-cardinality data never lands on the driver), saturation is
-a second broadcast pass with per-segment dedup, and classification is one
-broadcast + mapInPandas pass over the (much larger) query corpus.
+a second pass that broadcasts only the resolve stage's lost (slot, label)
+pairs, split into slot-range passes over budget, with per-segment dedup,
+and classification is one broadcast + mapInPandas pass over the (much
+larger) query corpus.
 """
 
 from __future__ import annotations
@@ -68,9 +70,8 @@ _SEG_IDS_SCHEMA = T.StructType(
         T.StructField("ids", T.BinaryType(), False),
         # lost (slot, label) claim pairs of this segment — int64 slots
         # followed by uint16 labels (n = len/10).  The saturation pass
-        # needs ONLY these (see MIBFClaims.lost_pairs), so the dense
-        # build can broadcast ~|collisions| bytes instead of the full
-        # uint16 id array.
+        # needs ONLY these (see MIBFClaims.lost_pairs): it broadcasts
+        # ~|collisions| bytes, never the uint16 id array.
         T.StructField("lost", T.BinaryType(), True),
     ]
 )
@@ -87,6 +88,17 @@ def _unpack_lost(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
         np.frombuffer(payload[8 * n :], dtype="<u2").astype(np.uint16),
     )
 
+
+def _lost_by_label(slots: np.ndarray, labels: np.ndarray) -> dict[int, np.ndarray]:
+    """Lost pairs → {label: sorted slots}.  Pairs are distinct per
+    (slot, label) — the resolve stage dedups them — so one sort suffices."""
+    order = np.lexsort((slots, labels))
+    slots, labels = slots[order], labels[order]
+    li, start = np.unique(labels, return_index=True)
+    end = np.append(start[1:], labels.size)
+    return {int(l): slots[a:b] for l, a, b in zip(li, start, end)}
+
+
 _SAT_SCHEMA = T.StructType(
     [
         T.StructField("seg", T.IntegerType(), False),
@@ -94,6 +106,18 @@ _SAT_SCHEMA = T.StructType(
     ]
 )
 
+# one lost-candidate frame of an over-budget saturation pass: int64
+# (label, probe positions...) bytes, and the pass that emitted it
+_FRAME_SCHEMA = T.StructType(
+    [
+        T.StructField("frame", T.BinaryType(), False),
+        T.StructField("k", T.IntegerType(), False),
+    ]
+)
+
+#: lost-pair bytes (10 per pair) one saturation pass broadcasts when the
+#: caller sets no budget; beyond it the pairs split into slot-range passes
+_LOST_PAIR_BUDGET = 64 << 20
 
 _MAX_SHARD_SEGMENTS = 128
 
@@ -173,7 +197,7 @@ def _resolved_segments(
 
     partials = base.mapInPandas(claims_pass, schema=_CLAIMS_SCHEMA)
 
-    def resolve_seg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def resolve_seg(key, pdf):
         """One reducer per slot-range segment: merge that segment's claims
         (associative min-tiebreak) and emit the resolved uint16 id slice
         plus the segment's lost (slot, label) claim pairs."""
@@ -281,7 +305,6 @@ def build_mibf(
     max_broadcast_bytes: int | None = None,
     canonical: bool = False,
     hash_family: str = "poly",
-    pin_source: bool = True,
 ) -> MIBFSketch:
     """Build one miBF over all values of ``key_col`` (labels).
 
@@ -302,21 +325,20 @@ def build_mibf(
        driver only memcpy-assembles slices (never touches claim blobs),
        mirroring the Bloom build's segmented merge (maker._assemble_fn);
     3. saturation: frames whose label lost every slot mark those slots
-       saturated (insertSaturation analog) — lost-slot sets are likewise
-       deduped per segment in reducers before the driver ORs the bit.
-    The corpus is read twice and never shuffled; only sparse claim blobs
-    move, and no claim-cardinality data structure ever lands on the
-    driver.  Labels are capped at 32767 (Doc/MultiIndex.md:165).
+       saturated (insertSaturation analog) — the corpus is rehashed
+       against the resolve stage's lost (slot, label) pairs
+       (``_saturated_slots``), and the saturated slots are deduped per
+       segment in reducers before the driver ORs the bit.  A corpus where
+       no claim lost its slot skips this pass.
+    The corpus is read twice (1 + K times when the lost pairs split into
+    K passes) and never shuffled; only sparse claim blobs move, and no
+    claim-cardinality data structure ever lands on the driver.  Labels
+    are capped at 32767 (Doc/MultiIndex.md:165).
 
-    ``max_broadcast_bytes`` caps the id-array bytes broadcast during the
-    saturation pass: beyond the cap, saturation runs sharded by slot-range
-    segment (one segment broadcast per pass, per-probe ownership entries
-    stitched by a frame-level OR — ``_saturate_sharded``) instead of
-    broadcasting the full resolved sketch.  None = single broadcast.
-
-    ``pin_source`` (sharded saturation only): pin the projected corpus
-    once for the segment passes; set False only for sources that
-    re-evaluate deterministically (see ``session.pin_rows``).
+    ``max_broadcast_bytes`` caps the lost-pair bytes broadcast per
+    saturation pass: beyond the cap the pairs split into slot-range
+    passes.  None = ``_LOST_PAIR_BUDGET``.  The id array itself is never
+    broadcast.
     """
     base, bc_map, labels, seed_arr, h, canonical, m_slots = _prep_build(
         spark, docs, key_col, text_col, shingle_w, num_hashes, occupancy,
@@ -339,8 +361,7 @@ def build_mibf(
         bounds, S,
     )
     ids = np.zeros(m_slots, dtype=np.uint16)
-    lost_acc: dict[int, list[np.ndarray]] = {}
-    n_lost = 0
+    lost_s, lost_l = [], []  # lost (slot, label) pairs of every segment
     # toPandas: the resolved slices are ~2 B x m_slots of binary — the
     # Arrow transfer path measured 2x faster than the pickled-row collect
     # for this payload (tools/r06_measure notes; guide §6 Arrow transfers)
@@ -349,161 +370,139 @@ def build_mibf(
         ids[bounds[s] : bounds[s + 1]] = np.frombuffer(bytes(r.ids), dtype=np.uint16)
         if r.lost:
             lslots, llabels = _unpack_lost(bytes(r.lost))
-            n_lost += lslots.size
-            for li in np.unique(llabels):
-                lost_acc.setdefault(int(li), []).append(lslots[llabels == li])
+            lost_s.append(lslots)
+            lost_l.append(llabels)
     sketch = MIBFSketch(
         m_slots, h, shingle_w, labels, ids, seed_arr, hash_family, canonical
     )
-
-    # --- saturation pass (insertSaturation, MIBFGen.hpp:196-223) ----------
-    # An element is saturated iff its label lost EVERY probe slot, and a
-    # probed slot is always claimed — so losing a slot == appearing in the
-    # resolve stage's lost-pair set.  When that set is small (it is
-    # |collision claims|, not |slots|), broadcast it instead of the full
-    # uint16 id array: the per-worker broadcast read drops from
-    # O(m_slots) to O(collisions) and a collision-free corpus (disjoint
-    # label vocabularies) skips the second corpus scan entirely.
-    if n_lost == 0:
+    if not lost_s:  # no claim lost its slot: nothing can saturate
         return sketch
-    lost_by_label = {
-        li: np.unique(np.concatenate(parts)) for li, parts in lost_acc.items()
-    }
-    lost_bytes = 10 * n_lost
-    if lost_bytes <= max(sketch.ids.nbytes // 2, 1 << 20) and (
-        max_broadcast_bytes is None or lost_bytes <= max_broadcast_bytes
-    ):
-        _saturate_lost_pairs(
-            spark, base, sketch, bc_map, lost_by_label, bounds, S,
-            seed_arr, hash_family, canonical,
-        )
-        return sketch
-    if max_broadcast_bytes is not None and sketch.ids.nbytes > max_broadcast_bytes:
-        n_seg = _clamp_segments(-(-sketch.ids.nbytes // max_broadcast_bytes))
-        _saturate_sharded(spark, base, sketch, bc_map, n_seg, pin_source=pin_source)
-        return sketch
-    bc_ids = spark.sparkContext.broadcast(sketch.serialize())
+    lost_slots, lost_labels = np.concatenate(lost_s), np.concatenate(lost_l)
 
-    def sat_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lmap = bc_map.value
-        resolved = MIBFSketch.deserialize(
-            bc_ids.value, m_slots, h, shingle_w, labels, seed_arr,
-            hash_family=hash_family, canonical=canonical,
-        )
-        cache: dict = {}
-        sat: list[np.ndarray] = []
-        for pdf in batches:
-            for lab, grp in pdf.groupby("__label"):
-                li = lmap.get(str(lab))
-                if li is None:
-                    continue
-                rows, _off = _frame_hash_rows(
-                    grp["__text"].to_numpy(), None, shingle_w, seed_arr, cache,
-                    canonical, hash_family,
-                )
-                if rows.size == 0:
-                    continue
-                pos = resolved.positions_for(rows)
-                lost = resolved.lost_elements(pos, li)
-                if lost.any():
-                    sat.append(np.unique(pos[:, lost]))
-        if sat:
-            allsat = np.unique(np.concatenate(sat))
-            cut = np.searchsorted(allsat, bounds)
-            out_seg, out_sl = [], []
-            for s in range(S):
-                lo, hi = int(cut[s]), int(cut[s + 1])
-                if hi > lo:
-                    out_seg.append(s)
-                    out_sl.append(allsat[lo:hi].tobytes())
-            yield pd.DataFrame({"seg": out_seg, "slots": out_sl})
+    def lost_fetch(lo: int, hi: int) -> dict[int, np.ndarray]:
+        sel = (lost_slots >= lo) & (lost_slots < hi)
+        return _lost_by_label(lost_slots[sel], lost_labels[sel])
 
-    def sat_reduce(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        """Dedup one segment's lost slots before they reach the driver."""
-        u = np.unique(
-            np.concatenate(
-                [np.frombuffer(bytes(p), dtype=np.int64) for p in pdf["slots"]]
-            )
-        )
-        return pd.DataFrame({"seg": [int(key[0])], "slots": [u.tobytes()]})
-
-    for r in (
-        base.mapInPandas(sat_pass, schema=_SAT_SCHEMA)
-        .groupBy("seg")
-        .applyInPandas(sat_reduce, schema=_SAT_SCHEMA)
-        .collect()
-    ):
+    for r in _saturated_slots(
+        spark, base, _sketch_meta(sketch), bc_map, lost_fetch,
+        10 * lost_slots.size, bounds, max_broadcast_bytes,
+    ).collect():
         sketch.apply_saturation(np.frombuffer(bytes(r["slots"]), dtype=np.int64))
     return sketch
 
 
-def _saturate_lost_pairs(
+def _saturated_slots(
     spark: SparkSession,
     base: DataFrame,
-    sketch: MIBFSketch,
+    meta: tuple,
     bc_map,
-    lost_by_label: dict[int, np.ndarray],
+    lost_fetch,
+    lost_bytes: int,
     bounds: np.ndarray,
-    S: int,
-    seed_arr: np.ndarray | None,
-    hash_family: str,
-    canonical: bool,
-) -> None:
-    """Saturation from the resolve stage's lost-pair sets — the id-array-
-    free twin of ``build_mibf``'s dense ``sat_pass``.
+    budget: int | None = None,
+) -> DataFrame:
+    """The saturation scan (insertSaturation, MIBFGen.hpp:196-223) →
+    DataFrame (seg, slots): the distinct saturated slots, one sorted
+    int64 blob per slot-range segment of ``bounds``.
 
-    ``lost_by_label[li]`` = sorted slots label ``li`` claimed but lost.
     A frame of label ``li`` is saturated iff ALL its probe slots are in
-    that set (every probed slot was claimed by the label in pass 1, so
-    'not owned' == 'lost'); label groups with an empty lost set skip the
-    membership test — only the rehash remains, and the pass is launched
-    at all only when some label lost something.
+    the resolve stage's lost-pair set of ``li`` (every probed slot was
+    claimed by the label, so 'not owned' == 'lost').  The corpus is
+    rehashed against those sets; the id array is never needed.
+
+    ``lost_fetch(lo, hi)`` returns ``{label: sorted lost slots}`` for
+    slot range ``[lo, hi)`` — in-memory arrays (``build_mibf``) or rows
+    of the parquet ``resolved`` table (``build_mibf_store``).  The pairs
+    (``lost_bytes`` in total) split into K slot-range passes so that one
+    pass broadcasts about ``budget`` bytes (None = ``_LOST_PAIR_BUDGET``;
+    K clamped by ``_clamp_segments``).
+
+    K = 1: one mapInPandas decides every frame, then a per-segment dedup.
+    K > 1: pass k emits a frame only when all its probes in ``[lo, hi)``
+    are lost — a frame whose probes all fall in one pass is thereby
+    decided inside the kernel.  The key (label, probe positions) comes
+    from the frame's content, so a groupBy on it needs no row ids: the
+    frame is saturated when it was emitted by as many distinct passes as
+    its probes touch.
     """
-    m_slots, h, shingle_w = sketch.m_slots, sketch.num_hashes, sketch.shingle_w
-    bc_lost = spark.sparkContext.broadcast(lost_by_label)
-    probe = MIBFSketch(
-        m_slots, h, shingle_w, [], np.zeros(0, dtype=np.uint16), seed_arr,
-        hash_family, canonical,
-    )
+    m_slots, h, w, _labels, seeds, family, canonical = meta
+    budget = _LOST_PAIR_BUDGET if budget is None else budget
+    K = _clamp_segments(-(-int(lost_bytes) // max(1, int(budget))))
+    pass_bounds = _seg_bounds(m_slots, K)
 
-    def sat_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lmap = bc_map.value
-        lostmap = bc_lost.value
-        cache: dict = {}
-        sat: list[np.ndarray] = []
+    def by_segment(slots: np.ndarray) -> pd.DataFrame:
+        """Distinct slots → one (seg, slots) row per non-empty segment."""
+        cut = np.searchsorted(slots, bounds)
+        keep = np.flatnonzero(np.diff(cut))
+        return pd.DataFrame(
+            {
+                "seg": keep,
+                "slots": [slots[cut[s] : cut[s + 1]].tobytes() for s in keep],
+            }
+        )
+
+    def scan(k: int) -> DataFrame:
+        lo, hi = int(pass_bounds[k]), int(pass_bounds[k + 1])
+        bc_lost = spark.sparkContext.broadcast(lost_fetch(lo, hi))
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            lmap = bc_map.value
+            lostmap = bc_lost.value
+            probe = MIBFSketch(
+                m_slots, h, w, [], np.zeros(0, dtype=np.uint16), seeds,
+                family, canonical,
+            )
+            cache: dict = {}
+            hits: list[np.ndarray] = []
+            for pdf in batches:
+                for lab, grp in pdf.groupby("__label"):
+                    li = lmap.get(str(lab))
+                    lost_L = lostmap.get(li)
+                    if lost_L is None:  # unknown label, or it lost nothing here
+                        continue
+                    rows, _off = _frame_hash_rows(
+                        grp["__text"].to_numpy(), None, w, seeds, cache,
+                        canonical, family,
+                    )
+                    if rows.size == 0:
+                        continue
+                    pos = probe.positions_for(rows)
+                    idx = np.searchsorted(lost_L, pos)
+                    np.minimum(idx, lost_L.size - 1, out=idx)
+                    member = lost_L[idx] == pos  # implies lo <= pos < hi
+                    in_pass = (pos >= lo) & (pos < hi)
+                    hit = member.any(axis=0) & (member == in_pass).all(axis=0)
+                    if hit.any():  # rows (label, probe positions...)
+                        lab_row = np.full((1, int(hit.sum())), li, dtype=np.int64)
+                        hits.append(np.vstack([lab_row, pos[:, hit]]).T)
+            if not hits:
+                return
+            frames = np.concatenate(hits)
+            if K == 1:  # every probe lies in this pass: the frames are decided
+                yield by_segment(np.unique(frames[:, 1:]))
+            else:
+                frames = np.unique(frames, axis=0)
+                yield pd.DataFrame({"frame": [f.tobytes() for f in frames], "k": k})
+
+        return base.mapInPandas(
+            run, schema=_SAT_SCHEMA if K == 1 else _FRAME_SCHEMA
+        )
+
+    def settle(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """Keep the frames every touched pass reported all-lost."""
         for pdf in batches:
-            for lab, grp in pdf.groupby("__label"):
-                li = lmap.get(str(lab))
-                if li is None:
-                    continue
-                lost_L = lostmap.get(int(li))
-                if lost_L is None or lost_L.size == 0:
-                    continue
-                rows, _off = _frame_hash_rows(
-                    grp["__text"].to_numpy(), None, shingle_w, seed_arr, cache,
-                    canonical, hash_family,
-                )
-                if rows.size == 0:
-                    continue
-                pos = probe.positions_for(rows)
-                idx = np.searchsorted(lost_L, pos)
-                np.minimum(idx, lost_L.size - 1, out=idx)
-                member = lost_L[idx] == pos
-                lost = member.all(axis=0)
-                if lost.any():
-                    sat.append(np.unique(pos[:, lost]))
-        if sat:
-            allsat = np.unique(np.concatenate(sat))
-            cut = np.searchsorted(allsat, bounds)
-            out_seg, out_sl = [], []
-            for s in range(S):
-                lo, hi = int(cut[s]), int(cut[s + 1])
-                if hi > lo:
-                    out_seg.append(s)
-                    out_sl.append(allsat[lo:hi].tobytes())
-            yield pd.DataFrame({"seg": out_seg, "slots": out_sl})
+            frames = np.frombuffer(
+                b"".join(pdf["frame"]), dtype=np.int64
+            ).reshape(len(pdf), h + 1)
+            pos = frames[:, 1:]
+            passes = np.sort(np.searchsorted(pass_bounds, pos, side="right") - 1, axis=1)
+            touched = 1 + (np.diff(passes, axis=1) != 0).sum(axis=1)
+            sat = pos[pdf["n"].to_numpy() == touched]
+            if sat.size:
+                yield by_segment(np.unique(sat))
 
-    def sat_reduce(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def dedup(key, pdf):
+        """Dedup one segment's saturated slots before they leave the job."""
         u = np.unique(
             np.concatenate(
                 [np.frombuffer(bytes(p), dtype=np.int64) for p in pdf["slots"]]
@@ -511,203 +510,18 @@ def _saturate_lost_pairs(
         )
         return pd.DataFrame({"seg": [int(key[0])], "slots": [u.tobytes()]})
 
-    for r in (
-        base.mapInPandas(sat_pass, schema=_SAT_SCHEMA)
-        .groupBy("seg")
-        .applyInPandas(sat_reduce, schema=_SAT_SCHEMA)
-        .collect()
-    ):
-        sketch.apply_saturation(np.frombuffer(bytes(r["slots"]), dtype=np.int64))
-
-
-def _lost_slots_from_pairs(
-    spark: SparkSession,
-    base: DataFrame,
-    meta: tuple,
-    bc_map,
-    lost_by_label: dict[int, np.ndarray],
-) -> DataFrame:
-    """Distributed lost-element scan from the resolve stage's lost-pair
-    sets: ONE corpus pass, no id-array broadcast — the store-build twin
-    of ``_saturate_lost_pairs`` (returns the same distinct ``slot``
-    DataFrame shape as ``_sharded_lost_slots``)."""
-    m_slots, h, w, _labels, seeds, family, canonical = meta
-    bc_lost = spark.sparkContext.broadcast(lost_by_label)
-    probe = MIBFSketch(
-        m_slots, h, w, [], np.zeros(0, dtype=np.uint16), seeds, family, canonical
-    )
-    slot_schema = T.StructType([T.StructField("slot", T.LongType(), False)])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lmap = bc_map.value
-        lostmap = bc_lost.value
-        cache: dict = {}
-        sat: list[np.ndarray] = []
-        for pdf in batches:
-            for lab, grp in pdf.groupby("__label"):
-                li = lmap.get(str(lab))
-                if li is None:
-                    continue
-                lost_L = lostmap.get(int(li))
-                if lost_L is None or lost_L.size == 0:
-                    continue
-                rows, _off = _frame_hash_rows(
-                    grp["__text"].to_numpy(), None, w, seeds, cache,
-                    canonical, family,
-                )
-                if rows.size == 0:
-                    continue
-                pos = probe.positions_for(rows)
-                idx = np.searchsorted(lost_L, pos)
-                np.minimum(idx, lost_L.size - 1, out=idx)
-                member = lost_L[idx] == pos
-                lost = member.all(axis=0)
-                if lost.any():
-                    sat.append(np.unique(pos[:, lost]))
-        if sat:
-            yield pd.DataFrame({"slot": np.unique(np.concatenate(sat))})
-
-    return base.mapInPandas(run, schema=slot_schema).distinct()
-
-
-def _saturate_sharded(
-    spark: SparkSession,
-    base: DataFrame,
-    sketch: MIBFSketch,
-    bc_map,
-    n_segments: int,
-    pin_source: bool = True,
-) -> None:
-    """Saturation without a full-array broadcast — the sharded twin of the
-    ``sat_pass`` in ``build_mibf`` (insertSaturation, MIBFGen.hpp:196-223).
-    Mutates ``sketch`` in place (sets SAT_BIT), like the dense pass.
-    """
-    bounds = _seg_bounds(sketch.m_slots, int(n_segments))
-    ids = sketch.ids
-    sat_slots = _sharded_lost_slots(
-        spark, base, _sketch_meta(sketch),
-        lambda s, lo, hi: ids[lo:hi].tobytes(), bc_map, bounds,
-        pin_source=pin_source,
-    )
-    pack_schema = T.StructType([T.StructField("slots", T.BinaryType(), False)])
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    {"slots": [pdf["slot"].to_numpy().astype(np.int64).tobytes()]}
-                )
-
-    for r in sat_slots.mapInPandas(pack, schema=pack_schema).collect():
-        sketch.apply_saturation(np.frombuffer(bytes(r["slots"]), dtype=np.int64))
-
-
-def _sharded_lost_slots(
-    spark: SparkSession,
-    base: DataFrame,
-    meta: tuple,
-    seg_bytes,
-    bc_map,
-    bounds: np.ndarray,
-    pin_source: bool = True,
-) -> DataFrame:
-    """The distributed lost-element scan shared by the in-memory sharded
-    saturation and the store build (insertSaturation, MIBFGen.hpp:196-223).
-
-    Pass s broadcasts only slot range ``[bounds[s], bounds[s+1])`` of the
-    resolved id array (``seg_bytes(s, lo, hi)`` — an in-memory slice or a
-    parquet segment read) and emits, for every probe position it owns, one
-    (row, frame, slot, owned-by-this-label) entry.  Every probe belongs to
-    exactly one segment, so a groupBy on (row, frame) sees all h probes of
-    every frame: frames where no probe is owned are the lost elements, and
-    their slots — deduped distributively — are the saturation set.  The
-    corpus is hashed once per segment and the probe entries ride one
-    shuffle; executor memory stays bounded by the segment size.  Returns a
-    DataFrame with one distinct ``slot`` column.
-    """
-    m_slots, h, w, _labels, seeds, family, canonical = meta
-    S = len(bounds) - 1
-    from ..session import pin_rows
-
-    # pin: saturation bits must come from ONE consistent row set across
-    # the S passes even for non-deterministic sources (see session.pin_rows;
-    # pin_source=False = caller asserts a deterministic source, re-scan)
-    keyed = pin_rows(
-        base.withColumn("__row", F.monotonically_increasing_id()),
-        pin=pin_source,
-    )
-    entry_schema = T.StructType(
-        [
-            T.StructField("__row", T.LongType(), False),
-            T.StructField("frame", T.LongType(), False),
-            T.StructField("slot", T.LongType(), False),
-            T.StructField("owned", T.BooleanType(), False),
-        ]
-    )
-
-    def seg_pass(s: int):
-        lo, hi = int(bounds[s]), int(bounds[s + 1])
-        bc_seg = spark.sparkContext.broadcast(seg_bytes(s, lo, hi))
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # must not close over `sketch` (would ship the full id array)
-            seg = np.frombuffer(bc_seg.value, dtype=np.uint16)
-            probe = MIBFSketch(
-                m_slots, h, w, [], np.zeros(0, dtype=np.uint16), seeds,
-                family, canonical,
-            )
-            lmap = bc_map.value
-            cache: dict = {}
-            for pdf in batches:
-                cols: list[list[np.ndarray]] = [[], [], [], []]
-                for lab, grp in pdf.groupby("__label"):
-                    li = lmap.get(str(lab))
-                    if li is None:
-                        continue
-                    rows_h, offsets = _frame_hash_rows(
-                        grp["__text"].to_numpy(), None, w, seeds, cache,
-                        canonical, family,
-                    )
-                    if rows_h.size == 0 or int(offsets[-1]) == 0:
-                        continue
-                    pos = probe.positions_for(rows_h)
-                    in_seg = (pos >= lo) & (pos < hi)
-                    ii, gg = np.nonzero(in_seg)
-                    if ii.size == 0:
-                        continue
-                    doc = np.searchsorted(offsets, gg, side="right") - 1
-                    slots = pos[ii, gg]
-                    row_ids = grp["__row"].to_numpy()
-                    cols[0].append(row_ids[doc])
-                    cols[1].append(gg - offsets[doc])
-                    cols[2].append(slots)
-                    cols[3].append(
-                        (seg[slots - lo] & ID_MASK) == np.uint16(li)
-                    )
-                if cols[0]:
-                    yield pd.DataFrame(
-                        {
-                            "__row": np.concatenate(cols[0]),
-                            "frame": np.concatenate(cols[1]),
-                            "slot": np.concatenate(cols[2]),
-                            "owned": np.concatenate(cols[3]),
-                        }
-                    )
-
-        return keyed.mapInPandas(run, schema=entry_schema)
-
-    entries = seg_pass(0)
-    for s in range(1, S):
-        entries = entries.unionByName(seg_pass(s))
-    lost = (
-        entries.groupBy("__row", "frame")
-        .agg(
-            F.max(F.col("owned").cast("int")).alias("any_owned"),
-            F.collect_list("slot").alias("slots"),
+    if K == 1:
+        slots = scan(0)
+    else:
+        legs = scan(0)
+        for k in range(1, K):
+            legs = legs.unionByName(scan(k))
+        slots = (
+            legs.groupBy("frame")
+            .agg(F.size(F.collect_set("k")).alias("n"))
+            .mapInPandas(settle, schema=_SAT_SCHEMA)
         )
-        .filter(F.col("any_owned") == 0)
-    )
-    return lost.select(F.explode("slots").alias("slot")).distinct()
+    return slots.groupBy("seg").applyInPandas(dedup, schema=_SAT_SCHEMA)
 
 
 def _sketch_meta(sketch: MIBFSketch) -> tuple:

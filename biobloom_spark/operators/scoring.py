@@ -72,11 +72,6 @@ class SegmentedBatch:
         return np.diff(self.offsets)
 
 
-def _segment_ids(offsets: np.ndarray, n: int) -> np.ndarray:
-    """Map flat index → doc index."""
-    return np.searchsorted(offsets, np.arange(n), side="right") - 1
-
-
 def _seg_sum(values: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     """Per-doc sums handling empty segments (reduceat misbehaves on them)."""
     out = np.zeros(offsets.size - 1, dtype=np.float64)

@@ -21,7 +21,6 @@ __all__ = [
     "plan_string",
     "count_exchanges",
     "assert_no_shuffle",
-    "assert_max_shuffles",
     "assert_no_cartesian",
     "scan_read_schema",
 ]
@@ -48,17 +47,6 @@ def assert_no_shuffle(df: DataFrame, what: str = "plan") -> None:
     if n:
         raise AssertionError(
             f"{what}: expected a shuffle-free plan, found {n} exchange(s):\n"
-            + plan_string(df, "simple")
-        )
-
-
-def assert_max_shuffles(df: DataFrame, limit: int, what: str = "plan") -> None:
-    """Fail if the plan shuffles more than ``limit`` times (e.g. the
-    bucketed build moves the corpus exactly once)."""
-    n = _shuffle_count(df)
-    if n > limit:
-        raise AssertionError(
-            f"{what}: expected <= {limit} shuffle(s), found {n}:\n"
             + plan_string(df, "simple")
         )
 

@@ -65,13 +65,15 @@ def pin_rows(df, pin: bool = True):
     """Materialize a DataFrame once so multi-pass evaluation sees ONE row
     set with stable surrogate ids.
 
-    The sharded/chunked paths (`_categorize_sharded`,
-    `_classify_mibf_sharded`, `_sharded_lost_slots`) attach
-    ``monotonically_increasing_id()`` and re-scan the plan once per
-    segment pass; for a non-deterministic source (``orderBy(rand())``, an
-    unseeded ``sample()``, a shuffle whose fetch order varies) each pass
-    would re-evaluate the plan and assign the SAME surrogate to DIFFERENT
-    rows, silently stitching partials from different documents together.
+    The sharded/chunked classify paths (`_categorize_sharded`,
+    `_classify_mibf_sharded`) attach ``monotonically_increasing_id()``
+    and re-scan the plan once per segment pass; for a non-deterministic
+    source (``orderBy(rand())``, an unseeded ``sample()``, a shuffle whose
+    fetch order varies) each pass would re-evaluate the plan and assign
+    the SAME surrogate to DIFFERENT rows, silently stitching partials from
+    different documents together.  (The miBF builds' split saturation
+    passes key frames by content instead of a surrogate, so they pin
+    nothing.)
     An eager ``localCheckpoint`` computes the projected rows once, stores
     them on the executors (memory-and-disk) with lineage truncated, and
     every pass reads those stored blocks: the surrogate is stable by

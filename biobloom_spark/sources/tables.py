@@ -111,18 +111,6 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
-def iceberg_enabled(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is configured on this session."""
-    try:
-        return any(
-            "iceberg" in (v or "").lower()
-            for k, v in spark.sparkContext.getConf().getAll()
-            if k.startswith("spark.sql.catalog")
-        )
-    except Exception:
-        return False
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read an input table (parquet path layout of /root/testdata)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

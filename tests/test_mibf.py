@@ -8,6 +8,8 @@ skip-gram (spaced-seed analog) miss tolerance.
 
 from __future__ import annotations
 
+import shutil
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -32,6 +34,48 @@ def _vocab_texts(rng, vocab_prefix, n_docs, n_tokens, vocab_size=400):
         )
         for _ in range(n_docs)
     ]
+
+
+def _reference_sketch(df, sk, key_col="lang", text_col="text"):
+    """The in-process reference build on the driver, sized like ``sk``:
+    ``MIBFSketch.from_claims`` over every claim, then ``lost_elements`` →
+    ``apply_saturation`` per label (MIBFGen.hpp passes 2-3)."""
+    from biobloom_spark.functions.text import batch_frames
+
+    rows = df.select(key_col, text_col).collect()
+    labels = sorted({r[0] for r in rows})
+    probe = MIBFSketch(
+        sk.m_slots, sk.num_hashes, sk.shingle_w, [], np.zeros(0, dtype=np.uint16),
+        None, sk.hash_family, sk.canonical,
+    )
+    pos = {}
+    for li, lab in enumerate(labels, start=1):
+        texts = np.array([r[1] for r in rows if r[0] == lab], dtype=object)
+        frames, _o, _t, _c = batch_frames(
+            texts, sk.shingle_w, {}, canonical=sk.canonical,
+            hash_family=sk.hash_family,
+        )
+        pos[li] = probe.positions_for(frames)
+    claims = MIBFClaims.merge_all(
+        [MIBFClaims.from_positions(p, li) for li, p in pos.items()]
+    )
+    ref = MIBFSketch.from_claims(
+        claims, sk.m_slots, sk.num_hashes, sk.shingle_w, labels, None,
+        sk.hash_family, sk.canonical,
+    )
+    for li, p in pos.items():
+        ref.apply_saturation(np.unique(p[:, ref.lost_elements(p, li)]))
+    return ref, 10 * claims.lost_pairs()[0].size
+
+
+def _saturating_corpus(spark):
+    """Two labels with IDENTICAL content: every slot is contested.
+    Cached: every saturation pass re-reads the corpus."""
+    text = " ".join(f"t{i}" for i in range(100))
+    return spark.createDataFrame(
+        [("a1", text, "a"), ("b1", text, "b")],
+        "doc_id string, text string, lang string",
+    ).cache()
 
 
 @pytest.fixture(scope="module")
@@ -76,33 +120,14 @@ class TestSketch:
         assert a.serialize() == b.serialize()
 
     def test_segmented_resolution_matches_local_twin(self, spark, labeled_corpus):
-        """Distributed per-segment ownership == single-machine from_claims
-        over the same claims (segment count must not affect the result)."""
-        from biobloom_spark.functions.text import batch_doc_shingles
-        from biobloom_spark.sketch.mibf import MIBFSketch
-
+        """Distributed per-segment ownership + saturation == the
+        single-machine reference over the same claims, full ids including
+        SAT_BIT (segment count must not affect the result)."""
         sk1 = build_mibf(spark, labeled_corpus, key_col="lang", merge_segments=1)
         sk5 = build_mibf(spark, labeled_corpus, key_col="lang", merge_segments=5)
         assert sk1.serialize() == sk5.serialize()
-        # local twin: resolve every claim on the driver via from_claims
-        rows = labeled_corpus.select("lang", "text").collect()
-        labels = sorted({r["lang"] for r in rows})
-        acc = MIBFClaims()
-        probe = MIBFSketch(sk1.m_slots, sk1.num_hashes, sk1.shingle_w, [],
-                           np.zeros(0, dtype=np.uint16))
-        for li, lab in enumerate(labels, start=1):
-            texts = np.array([r["text"] for r in rows if r["lang"] == lab])
-            frames, _o, _t, _c = batch_doc_shingles(texts, sk1.shingle_w)
-            acc = acc.merge(
-                MIBFClaims.from_positions(probe.positions_for(frames), li)
-            )
-        local = MIBFSketch.from_claims(
-            acc, sk1.m_slots, sk1.num_hashes, sk1.shingle_w, labels
-        )
-        # pre-saturation ownership must agree exactly
-        from biobloom_spark.sketch.mibf import ID_MASK as _IDM
-
-        assert np.array_equal(sk1.ids & _IDM, local.ids & _IDM)
+        ref, _lost_bytes = _reference_sketch(labeled_corpus, sk1)
+        assert np.array_equal(sk1.ids, ref.ids)
 
     def test_one_id_per_slot_uint16(self, mibf):
         assert mibf.ids.dtype == np.uint16
@@ -134,22 +159,24 @@ class TestSketch:
                 assert ((raw & SAT_BIT) != 0).all()
 
     def test_sharded_saturation_matches_dense(self, spark):
-        """A broadcast cap that forces the sharded saturation path must
-        yield a byte-identical sketch (same owners, same SAT bits) — the
-        executor-memory escape hatch for the build's last full-array
-        broadcast."""
-        text = " ".join(f"t{i}" for i in range(100))
-        df = spark.createDataFrame(
-            [("a1", text, "a"), ("b1", text, "b")],
-            "doc_id string, text string, lang string",
-        )
-        dense = build_mibf(spark, df, key_col="lang", occupancy=0.5)
-        assert dense.saturation_rate() > 0.05  # the pass has real work
-        cap = dense.ids.nbytes // 3  # forces >= 3 segments
-        sharded = build_mibf(
-            spark, df, key_col="lang", occupancy=0.5, max_broadcast_bytes=cap
-        )
-        assert dense.serialize() == sharded.serialize()
+        """Saturation at K = 1 (default budget) and split into K > 1
+        slot-range passes (a lost-pair budget below the pairs' bytes)
+        must equal the in-process reference byte for byte — owners and
+        SAT bits — at one and at five merge segments."""
+        df = _saturating_corpus(spark)
+        base = build_mibf(spark, df, key_col="lang", occupancy=0.5)
+        ref, lost_bytes = _reference_sketch(df, base)
+        assert ref.saturation_rate() > 0.05  # the pass has real work
+        cap = base.ids.nbytes // 3
+        assert lost_bytes > cap  # the cap really splits the pairs
+        assert np.array_equal(base.ids, ref.ids)
+        for segs in (1, 5):
+            for budget in (None, cap):
+                sk = build_mibf(
+                    spark, df, key_col="lang", occupancy=0.5,
+                    merge_segments=segs, max_broadcast_bytes=budget,
+                )
+                assert np.array_equal(sk.ids, ref.ids), (segs, budget)
 
     def test_serde_roundtrip(self, mibf):
         back = MIBFSketch.deserialize(
@@ -531,8 +558,17 @@ class TestHashFamilies:
         _, df = dna_corpus
         sk = build_mibf(
             spark, df, key_col="lang", shingle_w=self.K, hash_family="nthash",
-            max_broadcast_bytes=30_000,  # forces a multi-segment saturation pass
+            max_broadcast_bytes=30_000,
         )
+        # nthash saturation == the in-process reference, also with the
+        # lost pairs split into K > 1 passes
+        ref, lost_bytes = _reference_sketch(df, sk)
+        assert np.array_equal(sk.ids, ref.ids)
+        split = build_mibf(
+            spark, df, key_col="lang", shingle_w=self.K, hash_family="nthash",
+            max_broadcast_bytes=lost_bytes // 3,
+        )
+        assert np.array_equal(split.ids, ref.ids)
         key = lambda r: (
             r["assigned"], tuple(r["hits"]), r["n_frames"],
             round(r["best_score"], 9),
@@ -586,24 +622,26 @@ class TestStore:
         assert store.occupancy() == pytest.approx(mibf.occupancy())
         assert store.saturation_rate() == pytest.approx(mibf.saturation_rate())
 
-    def test_store_build_with_saturation_matches(self, spark, tmp_path):
+    def test_store_build_with_saturation_matches(self, spark, tmp_path, monkeypatch):
         """Same degenerate corpus as the sharded-saturation test: the
-        store's cogrouped SAT update must set the same bits."""
+        store's cogrouped SAT update must set the same bits, at K = 1 and
+        with the lost pairs split into K > 1 passes (budget patched)."""
+        from biobloom_spark.operators import mibf as M
         from biobloom_spark.operators.mibf_store import build_mibf_store
 
-        text = " ".join(f"t{i}" for i in range(100))
-        df = spark.createDataFrame(
-            [("a1", text, "a"), ("b1", text, "b")],
-            "doc_id string, text string, lang string",
-        )
+        df = _saturating_corpus(spark)
         dense = build_mibf(spark, df, key_col="lang", occupancy=0.5)
         assert dense.saturation_rate() > 0.05
-        store = build_mibf_store(
-            spark, df, str(tmp_path / "sat"), key_col="lang", occupancy=0.5,
-            min_segments=3, segment_bytes=1,
-        )
+        ref, lost_bytes = _reference_sketch(df, dense)
+        kw = dict(key_col="lang", occupancy=0.5, min_segments=3, segment_bytes=1)
+        store = build_mibf_store(spark, df, str(tmp_path / "sat"), **kw)
         assert store.to_sketch(spark).serialize() == dense.serialize()
         assert store.sat_slots == int(((dense.ids & SAT_BIT) != 0).sum())
+
+        monkeypatch.setattr(M, "_LOST_PAIR_BUDGET", lost_bytes // 4)
+        split = build_mibf_store(spark, df, str(tmp_path / "sat_split"), **kw)
+        assert np.array_equal(split.to_sketch(spark).ids, ref.ids)
+        assert split.sat_slots == store.sat_slots
 
     def test_store_classify_matches_in_memory(
         self, spark, labeled_corpus, mibf, store_env
@@ -667,7 +705,8 @@ class TestStore:
 
     def test_store_resume_from_kill(self, spark, labeled_corpus, tmp_path, monkeypatch):
         """Checkpointed lifecycle: kill after the resolution stage, resume
-        without repeating it; later stages checkpoint too; a param change
+        without repeating it; a resolved checkpoint without lost pairs is
+        not resumed from; later stages checkpoint too; a param change
         invalidates the snapshot and rebuilds from scratch."""
         import biobloom_spark.operators.mibf_store as ms
 
@@ -682,15 +721,35 @@ class TestStore:
             raise RuntimeError("killed mid-build")
 
         # run 1: dies between resolution and saturation — resolved is
-        # checkpointed, segments/meta are not (both saturation routes are
-        # killed: the round-6 lost-pair fast path and the sharded rescan)
-        monkeypatch.setattr(ms, "_sharded_lost_slots", boom)
-        monkeypatch.setattr(ms, "_lost_slots_from_pairs", boom)
+        # checkpointed, segments/meta are not
+        monkeypatch.setattr(ms, "_saturated_slots", boom)
         with pytest.raises(RuntimeError, match="killed"):
             ms.build_mibf_store(spark, labeled_corpus, path, **kw)
         monkeypatch.undo()
         assert ms._stage_done(spark, f"{path}/resolved")
         assert not ms._stage_done(spark, f"{path}/segments")
+
+        # run 1b: a resolved checkpoint without the `lost` column (written
+        # before the resolve stage emitted lost pairs) keeps its _SUCCESS
+        # but is not resumed from: resolution re-runs
+        resolved = f"{path}/resolved"
+        legacy = str(tmp_path / "legacy_resolved")
+        spark.read.parquet(resolved).drop("lost").write.parquet(legacy)
+        shutil.rmtree(resolved)
+        shutil.move(legacy, resolved)
+        assert ms._stage_done(spark, resolved)
+        assert "lost" not in spark.read.parquet(resolved).columns
+        calls = []
+        resolve = ms._resolved_segments
+        monkeypatch.setattr(
+            ms, "_resolved_segments", lambda *a, **k: calls.append(1) or resolve(*a, **k)
+        )
+        monkeypatch.setattr(ms, "_saturated_slots", boom)
+        with pytest.raises(RuntimeError, match="killed"):
+            ms.build_mibf_store(spark, labeled_corpus, path, **kw)
+        monkeypatch.undo()
+        assert calls == [1]
+        assert "lost" in spark.read.parquet(resolved).columns
 
         # run 2: resumes past resolution (which would now raise) and
         # completes identically to the dense build
@@ -714,6 +773,24 @@ class TestStore:
             resume=True, snapshot_id="snap-b",
         )
         assert store2.to_sketch(spark).serialize() == reference.serialize()
+
+
+class TestGroupedMapTypeHints:
+    def test_builds_raise_no_eval_type_warning(self, spark, labeled_corpus):
+        """Spark 4.1 warns "Cannot infer the eval type from type hints"
+        for grouped-map kernels whose hints it cannot parse; no Bloom or
+        miBF build kernel may trigger it."""
+        import warnings
+
+        from biobloom_spark.operators.maker import build_filters, load_registry
+
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            reg = build_filters(spark, labeled_corpus, key_col="lang")
+            assert len(load_registry(reg)) == 3
+            build_mibf(spark, _saturating_corpus(spark), key_col="lang")
+        msgs = [str(w.message) for w in caught]
+        assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
 
 
 class TestClaimsWireFormat:
@@ -836,19 +913,22 @@ class TestLostPairSaturation:
 
     def test_lost_pair_saturation_matches_sharded(self, spark):
         """Shared-vocabulary corpus (every slot contested): the lost-pair
-        saturation path (default guard) must produce a byte-identical
-        sketch to the sharded full-array saturation path (forced via
-        ``max_broadcast_bytes=1``, which also rules the lost-pair
-        broadcast out)."""
+        saturation at K = 1 and split into K > 1 passes (a budget of one
+        byte — the 128-pass clamp) must equal the in-process reference."""
         from biobloom_spark.operators import mibf as M
 
         text = " ".join(f"s{i % 37}x{i % 11}" for i in range(150))
         rows = [(f"d{li}{j}", text + f" tail{li}", f"L{li}")
                 for li in range(3) for j in range(2)]
-        df = spark.createDataFrame(rows, "doc_id string, text string, lang string")
-        sk_fast = M.build_mibf(spark, df, key_col="lang", occupancy=0.5)
-        sk_sharded = M.build_mibf(
+        df = spark.createDataFrame(
+            rows, "doc_id string, text string, lang string"
+        ).cache()  # the split build re-reads the corpus once per pass
+        sk_one = M.build_mibf(spark, df, key_col="lang", occupancy=0.5)
+        ref, lost_bytes = _reference_sketch(df, sk_one)
+        assert ref.saturation_rate() > 0  # the corpus really contests
+        assert lost_bytes > 1
+        sk_split = M.build_mibf(
             spark, df, key_col="lang", occupancy=0.5, max_broadcast_bytes=1,
         )
-        assert sk_fast.serialize() == sk_sharded.serialize()
-        assert sk_fast.saturation_rate() > 0  # the corpus really contests
+        assert np.array_equal(sk_one.ids, ref.ids)
+        assert np.array_equal(sk_split.ids, ref.ids)
